@@ -101,6 +101,14 @@ def stored_shape_tie_break(
     return F.md5(F.concat_ws("\x1f", *parts))
 
 
+def _drop_delete_markers(df: DataFrame) -> DataFrame:
+    """Remove the rows flagged ``_deleted`` and the flag column itself
+    (a NULL flag — a file written before tombstones — counts as live)."""
+    return df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(
+        DELETED_COL
+    )
+
+
 class ParquetMergeTable:
     """A PK-keyed, hash-bucketed parquet table supporting CDC MERGE.
 
@@ -276,9 +284,7 @@ class ParquetMergeTable:
             # markers must not surface as live rows. The marker still
             # WINS resolution before being filtered, so a stale replay
             # stays suppressed until compaction physically drops it.
-            resolved = resolved.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            ).drop(DELETED_COL)
+            resolved = _drop_delete_markers(resolved)
         return resolved
 
     def _read_files(self, buckets: list[int] | None = None) -> DataFrame | None:
@@ -331,9 +337,7 @@ class ParquetMergeTable:
         if state is None:
             return self.spark.createDataFrame([], "struct<>")
         if DELETED_COL in state.columns:
-            state = state.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            ).drop(DELETED_COL)
+            state = _drop_delete_markers(state)
         return state.drop(BUCKET_COL, SEQ_STATE_COL)
 
     def truncate(self) -> None:
@@ -486,10 +490,8 @@ class ParquetMergeTable:
             # eager engine (and to the drained-L0 raw read path), or
             # _read_state consumers would see _deleted=false appear and
             # vanish depending on whether L0 happened to be drained
-            resolved = resolved.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            ).drop(DELETED_COL)
-        self._write(resolved, full_overwrite=False, touched=touched)
+            resolved = _drop_delete_markers(resolved)
+        self._write(resolved, touched=touched)
         self._l0.delete_files(l0_files)
 
     def _merge_deduped(self, deduped: DataFrame) -> None:
@@ -513,7 +515,7 @@ class ParquetMergeTable:
             result = first.withColumnRenamed(SEQUENCE_COL, SEQ_STATE_COL).drop(
                 OPERATION_COL
             )
-            self._write(result, full_overwrite=False)
+            self._write(result)
             return
 
         b = deduped.alias("b")
@@ -629,7 +631,7 @@ class ParquetMergeTable:
         result = joined.filter(keep).select(
             *key_exprs, *[pick(c) for c in non_key_data], seq_expr, bucket_expr, *extra
         )
-        self._write(result, full_overwrite=False, touched=touched)
+        self._write(result, touched=touched)
 
     def purge_keys(self, keys_df: DataFrame) -> int:
         """Compliance erasure (right-to-be-forgotten): physically remove
@@ -674,7 +676,7 @@ class ParquetMergeTable:
             if doomed == 0:
                 return 0
             kept = state.alias("t").join(purge.alias("p"), cond, "left_anti")
-            self._write(kept, full_overwrite=False, touched=touched)
+            self._write(kept, touched=touched)
             return doomed
         finally:
             purge.unpersist()
@@ -704,14 +706,9 @@ class ParquetMergeTable:
         if not touched:
             return
         kept = state.filter(F.col(BUCKET_COL).isin(touched)).filter(~doomed)
-        self._write(kept, full_overwrite=False, touched=touched)
+        self._write(kept, touched=touched)
 
-    def _write(
-        self,
-        df: DataFrame,
-        full_overwrite: bool,
-        touched: list[int] | None = None,
-    ) -> None:
+    def _write(self, df: DataFrame, touched: list[int] | None = None) -> None:
         """Commit the merged buckets.
 
         DURABILITY CONTRACT (documented, not transactional): the commit
@@ -742,10 +739,7 @@ class ParquetMergeTable:
             (
                 df.repartition(BUCKET_COL)
                 .write.mode("overwrite")
-                .option(
-                    "partitionOverwriteMode",
-                    "static" if full_overwrite else "dynamic",
-                )
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy(BUCKET_COL)
                 .parquet(self.path)
             )

@@ -27,6 +27,13 @@ from etl_stream_spark.cdc.envelope import OP_TRUNCATE, OPERATION_COL, SEQUENCE_C
 from etl_stream_spark.cdc.merge import ParquetMergeTable, _hadoop_fs, _hadoop_path
 from etl_stream_spark.schema.identifiers import validate_identifier
 
+#: Column of a decoded multi-table batch naming each event's table
+#: (``sources/envelope_decode.py`` emits it).
+TABLE_COL = "table"
+#: Per-table merges of one batch submitted concurrently (Spark
+#: schedules their jobs side by side).
+MAX_PARALLEL_TABLES = 4
+
 
 def apply_with_truncate_barrier(
     table: ParquetMergeTable,
@@ -92,8 +99,6 @@ class CdcBatchApplier:
         spark: SparkSession,
         base_path: str,
         tables: dict[str, CdcTableConfig],
-        table_col: str = "table",
-        max_parallel_tables: int = 4,
         metrics=None,
         rollups: dict[str, "IncrementalRollup"] | None = None,
         histories: dict[str, "Scd2Table"] | None = None,
@@ -112,8 +117,6 @@ class CdcBatchApplier:
         self.spark = spark
         self.base_path = base_path.rstrip("/")
         self.txn_app_id = txn_app_id
-        self.table_col = table_col
-        self.max_parallel_tables = max_parallel_tables
         self.metrics = metrics  # optional MetricsRegistry
         self.rollups = dict(rollups or {})  # table name → IncrementalRollup
         self.histories = dict(histories or {})  # table name → Scd2Table
@@ -178,7 +181,7 @@ class CdcBatchApplier:
         # the per-table barrier and the rollup's has-truncate probe don't
         # each re-execute the batch lineage.
         meta = (
-            events.groupBy(self.table_col)
+            events.groupBy(TABLE_COL)
             .agg(
                 F.collect_set(
                     F.when(
@@ -208,7 +211,7 @@ class CdcBatchApplier:
                 applied = self._last_epoch(name)
                 if applied is not None and epoch_id <= applied:
                     return
-            per_table = events.filter(F.col(self.table_col) == name).drop(self.table_col)
+            per_table = events.filter(F.col(TABLE_COL) == name).drop(TABLE_COL)
             # Right-to-be-forgotten suppression: erased keys never reach
             # the merge, the history, OR the quarantine — even on replays
             # (cdc/erasure.py). One FS existence check per table per
@@ -263,11 +266,11 @@ class CdcBatchApplier:
             if self.metrics is not None:
                 self.metrics.inc("cdc_batches_applied_total", labels={"table": name})
 
-        if len(names) == 1 or self.max_parallel_tables <= 1:
+        if len(names) == 1:
             for n in names:
                 run(n)
         else:
-            with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as pool:
+            with ThreadPoolExecutor(max_workers=MAX_PARALLEL_TABLES) as pool:
                 list(pool.map(run, names))
 
         # Sequential view-maintenance phase: each join view sees the
@@ -277,7 +280,7 @@ class CdcBatchApplier:
         # (The fused discovery pass already knows which tables carried
         # truncates — no per-view re-scan of the batch lineage.)
         def _per(name: str) -> DataFrame:
-            return events.filter(F.col(self.table_col) == name).drop(self.table_col)
+            return events.filter(F.col(TABLE_COL) == name).drop(TABLE_COL)
 
         for view, fact_name, dim_name in self.join_views:
             fact_per = _per(fact_name) if fact_name in names else None

@@ -38,10 +38,11 @@ hot keys at scale).
 from __future__ import annotations
 
 import math
+from fractions import Fraction
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.partitioning import ensure_parallelism
@@ -111,6 +112,18 @@ def _mg_summary(items: DataFrame, capacity: int, item_type: str) -> DataFrame:
     )
 
 
+def _reaches_phi(count_col: str, n_col: str, phi: float) -> Column:
+    """``count ≥ ceil(phi · n)`` in exact integer arithmetic. With
+    ``phi = num / den`` taken from its decimal spelling, the test is
+    ``count · den ≥ num · n`` — no binary rounding (``0.07 · 100`` is
+    7.000000000000001 as a double, whose ceil would demand 8). The
+    decimal(38,0) operands keep both products from overflowing."""
+    frac = Fraction(str(phi))
+    count = F.col(count_col).cast("decimal(38,0)")
+    n = F.col(n_col).cast("decimal(38,0)")
+    return count * F.lit(frac.denominator) >= F.lit(frac.numerator) * n
+
+
 def mg_hot_candidates(
     df: DataFrame,
     item_col: str,
@@ -155,7 +168,7 @@ def mg_hot_candidates(
     total = summary.filter(F.col("item").isNull()).agg(F.sum("n").alias("_n"))
     return (
         cand.crossJoin(F.broadcast(total))
-        .filter(F.col("_c") >= F.ceil(F.lit(float(phi)) * F.col("_n")))
+        .filter(_reaches_phi("_c", "_n", phi))
         .select("item")
     )
 
@@ -220,7 +233,7 @@ def heavy_hitters(
     total = summary.filter(F.col("item").isNull()).agg(F.sum("n").alias("_n"))
     return (
         counts.crossJoin(F.broadcast(total))
-        .filter(F.col("cnt") >= F.ceil(F.lit(float(phi)) * F.col("_n")))
+        .filter(_reaches_phi("cnt", "_n", phi))
         .select(
             "item",
             F.col("cnt").cast("bigint").alias("cnt"),

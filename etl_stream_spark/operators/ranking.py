@@ -43,10 +43,16 @@ global-window plan — property-tested against it in
 ``tests/test_ranking.py``, including under AQE on/off, input
 repartitioning, and heavy-tie distributions.
 
+One staging (``_stage``) serves every caller: :func:`with_global_orders`
+takes N :class:`RankSpec` orders over one frame and shares the bounds
+aggregate and both stats passes among them; :func:`with_global_order`
+is its one-spec call, and :func:`unit_occupancy` reads the same cells.
+
 Cost model at 100 TB: three bounded map-side-combinable aggregates
-plus ONE hash shuffle of the frame (by unit) and one bounded broadcast
-— versus one task receiving every row under the naive plan.
-Parallelism is ``min(#non-empty units, shuffle partitions)``.
+(whatever the spec count) plus ONE hash shuffle of the frame (by unit)
+per spec and one bounded broadcast — versus one task receiving every
+row under the naive plan. Parallelism is ``min(#non-empty units,
+shuffle partitions)``.
 
 Clustered-with-outliers keys (the old honest limit) are handled by a
 second, ADAPTIVE bucketing level: a distribution whose mass clusters
@@ -78,6 +84,9 @@ just exactness.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -85,7 +94,6 @@ _C = "_fb_c"  # primary-column coarse equi-width bucket
 _V = "_fb_v"  # unit value key: coarse bucket × refine_max + adaptive sub-bucket
 _K = "_fb_k"  # tie-break fine bucket
 _UK = "_fb_uk"  # unit sub-key: tie sub-bucket when pure-tie, else -1
-_LRN = "_fb_lrn"
 
 _NUMERIC_PREFIXES = (
     "tinyint",
@@ -125,74 +133,115 @@ def _bucket_dyn(col: Column, mn: Column, mx: Column, n: Column, asc: bool) -> Co
     return idx if asc else (n - 1) - idx
 
 
-def _prepare(
+class RankSpec(NamedTuple):
+    """One global order over the frame: ``order_by`` is a list of
+    ``(column, ascending)`` and must be a TOTAL order (append a unique
+    tie-break); order columns non-null numeric. ``rank_col``: global
+    ``row_number`` under that order (1-based, BIGINT). ``count_col``:
+    total row count on every row (the ``count(*) over ()`` analog).
+    ``running_sums``: each ``(value_col, cum_col, total_col)`` emits the
+    running sum of ``value_col`` up to and including the current row,
+    plus (when ``total_col`` is not None) the grand total."""
+
+    order_by: list[tuple[str, bool]]
+    rank_col: str | None = None
+    count_col: str | None = None
+    running_sums: Sequence[tuple[str, str, str | None]] = ()
+
+
+def _stage(
     df: DataFrame,
-    order_by: list[tuple[str, bool]],
+    specs: list[RankSpec],
     fine_buckets: int,
     tie_buckets: int,
     refine_max: int,
-    running_sums,
     materialize: bool,
-):
-    """Shared staging of the two-phase plan: the unit-keyed frame and
-    its bounded per-(unit, tie-bucket) cell stats. Returns ``(framed,
-    cells, sum_types, sort)``."""
+) -> tuple[DataFrame, DataFrame]:
+    """The two-phase staging of every spec: returns ``(framed, cells)``.
+    ``framed`` is the frame plus each spec's unit-value key
+    ``_fb_v_{s}`` and tie key ``_fb_k_{s}``; ``cells`` holds the bounded
+    ``_fb_cnt``/``_fb_lo``/``_fb_hi`` (and ``_fb_sum_{cum}``) stats of
+    every non-empty ``(_fb_s, _fb_v, _fb_k)`` cell. The coarse and cell
+    stats passes each run once over a row-expanded ``(spec, bucket)``
+    key — ``explode(array(struct...))`` then one groupBy, the manual
+    form of GROUPING SETS — so the frame is read once per pass whatever
+    the spec count, map-side combinable into ≤ N·2·fine·tie groups.
+    The struct carries the original-typed primary value, so every
+    spec's primary order column must share one dtype."""
     if materialize:
         df = df.localCheckpoint(eager=False)
     dtypes = dict(df.dtypes)
-    v_name, v_asc = order_by[0]
-    k_name, k_asc = order_by[1] if len(order_by) > 1 else (None, True)
-    for c, _a in order_by[:2]:
-        if not dtypes[c].startswith(_NUMERIC_PREFIXES):
-            raise ValueError(f"order column {c!r} must be numeric, got {dtypes[c]}")
-    sort = [(F.col(c).asc() if asc else F.col(c).desc()) for c, asc in order_by]
-
-    vd = F.col(v_name).cast("double")
-    bounds_agg = [
-        F.min(vd).alias("_fb_vmin"),
-        F.max(vd).alias("_fb_vmax"),
-        F.count(F.lit(1)).alias("_fb_nr"),
-    ]
-    if k_name is not None:
-        kd = F.col(k_name).cast("double")
-        bounds_agg += [F.min(kd).alias("_fb_kmin"), F.max(kd).alias("_fb_kmax")]
-    # deterministic 1-row aggregate; lazily checkpointed because the
-    # plan embeds it FOUR times (cells and output both re-derive framed,
-    # and the coarse subtree nests another framed) — a 1-row sever costs
-    # one trivial job and saves three re-aggregations of the frame
-    bounds = df.agg(*bounds_agg).localCheckpoint(eager=False)
-
-    framed = df.crossJoin(F.broadcast(bounds)).withColumn(
-        _C, _bucket(vd, F.col("_fb_vmin"), F.col("_fb_vmax"), fine_buckets, v_asc)
-    )
-    if k_name is not None:
-        framed = framed.withColumn(
-            _K,
-            _bucket(kd, F.col("_fb_kmin"), F.col("_fb_kmax"), tie_buckets, k_asc),
+    for spec in specs:
+        for c, _a in spec.order_by[:2]:
+            if not dtypes[c].startswith(_NUMERIC_PREFIXES):
+                raise ValueError(
+                    f"order column {c!r} must be numeric, got {dtypes[c]}"
+                )
+    v_types = {dtypes[spec.order_by[0][0]] for spec in specs}
+    if len(v_types) > 1:
+        raise ValueError(
+            f"batched ranks need one shared primary dtype, got {sorted(v_types)}"
         )
-    else:
-        framed = framed.withColumn(_K, F.lit(0).cast("long"))
-    framed = framed.drop("_fb_vmin", "_fb_vmax", "_fb_kmin", "_fb_kmax")
+
+    # ONE deterministic 1-row bounds aggregate for every spec; lazily
+    # checkpointed because the plan embeds it several times (cells and
+    # output both re-derive framed, and the coarse subtree nests
+    # another framed) — a 1-row sever costs one trivial job and saves
+    # the re-aggregations. Each spec's coarse cell and tie bucket are
+    # arithmetic on the row and its broadcast bounds.
+    bounds_agg = [F.count(F.lit(1)).alias("_fb_nr")]
+    bound_cols: list[str] = []
+
+    def bucket(s: int, col: str, asc: bool, tag: str, n: int) -> Column:
+        # adds the column's min/max to the one bounds aggregate
+        d = F.col(col).cast("double")
+        lo, hi = f"_fb_{tag}min_{s}", f"_fb_{tag}max_{s}"
+        bounds_agg.extend([F.min(d).alias(lo), F.max(d).alias(hi)])
+        bound_cols.extend([lo, hi])
+        return _bucket(d, F.col(lo), F.col(hi), n, asc)
+
+    keys = {}
+    for s, spec in enumerate(specs):
+        (v_name, v_asc), *ties = spec.order_by
+        keys[f"{_C}_{s}"] = bucket(s, v_name, v_asc, "v", fine_buckets)
+        keys[f"{_K}_{s}"] = (
+            bucket(s, *ties[0], "k", tie_buckets) if ties else F.lit(0).cast("long")
+        )
+    bounds = df.agg(*bounds_agg).localCheckpoint(eager=False)
+    framed = df.crossJoin(F.broadcast(bounds)).withColumns(keys).drop(*bound_cols)
 
     # Adaptive second level: per-coarse-cell exact stats (bounded ≤
-    # fine_buckets rows, map-side combinable, deterministic). A cell
-    # whose ORIGINAL-typed span is non-degenerate (not a pure tie — a
-    # double-image test would misread distinct >2^53 keys as ties and
-    # mis-split them) is re-bucketed over its own exact [lo, hi] with
-    # mass-proportional levels ceil(cnt·fine/n): the clustered-with-
-    # outliers collapse re-spreads to ~n/fine per unit, while
-    # Σ levels ≤ 2·fine keeps the unit table bounded for ANY data.
-    # (cnt·fine stays far inside BIGINT: cnt ≤ n < 2^52 at any SF.)
-    # the DOUBLE span test suffices here: refinement sub-buckets on the
-    # double image, so a cell whose doubles all collide (distinct keys
-    # beyond 2^53) cannot be split by it anyway — rc stays 1 and the
-    # cells-level ORIGINAL-typed span test below still guards the
-    # pure-tie sub-split for exactly that case
-    coarse = framed.groupBy(_C).agg(
-        F.count(F.lit(1)).alias("_fb_ccnt"),
-        F.min(vd).alias("_fb_clo"),
-        F.max(vd).alias("_fb_chi"),
-        F.max("_fb_nr").alias("_fb_cn"),
+    # fine_buckets rows per spec, map-side combinable, deterministic).
+    # A cell whose span is non-degenerate (not a pure tie) is
+    # re-bucketed over its own exact [lo, hi] with mass-proportional
+    # levels ceil(cnt·fine/n): the clustered-with-outliers collapse
+    # re-spreads to ~n/fine per unit, while Σ levels ≤ 2·fine keeps the
+    # unit table bounded for ANY data. (cnt·fine stays far inside
+    # BIGINT: cnt ≤ n < 2^52 at any SF.) The DOUBLE span test suffices
+    # here: refinement sub-buckets on the double image, so a cell whose
+    # doubles all collide (distinct keys beyond 2^53) cannot be split
+    # by it anyway — rc stays 1 and the cells-level ORIGINAL-typed span
+    # test still guards the pure-tie sub-split for exactly that case.
+    coarse_structs = [
+        F.struct(
+            F.lit(s).alias("_fb_s"),
+            F.col(f"{_C}_{s}").alias(_C),
+            F.col(spec.order_by[0][0]).cast("double").alias("_fb_vd"),
+        )
+        for s, spec in enumerate(specs)
+    ]
+    coarse = (
+        framed.select(
+            F.explode(F.array(*coarse_structs)).alias("_fb_e"), F.col("_fb_nr")
+        )
+        .select("_fb_e.*", "_fb_nr")
+        .groupBy("_fb_s", _C)
+        .agg(
+            F.count(F.lit(1)).alias("_fb_ccnt"),
+            F.min("_fb_vd").alias("_fb_clo"),
+            F.max("_fb_vd").alias("_fb_chi"),
+            F.max("_fb_nr").alias("_fb_cn"),
+        )
     )
     # refine only past 4× the even share: a well-spread key (every
     # catalog sort key today) keeps rc = 1 everywhere — single-level
@@ -211,43 +260,75 @@ def _prepare(
         .otherwise(F.lit(1))
         .cast("long")
     )
-    # bounded ≤ fine_buckets rows, but its plan nests a full-frame
-    # aggregation — sever it so the two consumers of the returned
-    # ``framed`` (cells and the output subtree) don't each recompute
-    # that pass (the with_global_orders discipline below)
+    # bounded ≤ N·fine rows, but its plan nests a full-frame
+    # aggregation and framed joins it once per spec — sever it so the
+    # consumers of framed (cells and the output subtree) don't each
+    # recompute that pass
     coarse = coarse.select(
-        _C, "_fb_clo", "_fb_chi", rc.alias("_fb_rc")
+        "_fb_s", _C, "_fb_clo", "_fb_chi", rc.alias("_fb_rc")
     ).localCheckpoint(eager=False)
-    framed = framed.join(F.broadcast(coarse), _C)
-    v2 = (
-        F.when(
-            F.col("_fb_rc") > 1,
-            _bucket_dyn(
-                vd, F.col("_fb_clo"), F.col("_fb_chi"), F.col("_fb_rc"), v_asc
-            ),
+    for s, spec in enumerate(specs):
+        v_name, v_asc = spec.order_by[0]
+        cs = coarse.filter(F.col("_fb_s") == s).select(
+            F.col(_C).alias(f"{_C}_{s}"),
+            F.col("_fb_clo").alias(f"_fb_clo_{s}"),
+            F.col("_fb_chi").alias(f"_fb_chi_{s}"),
+            F.col("_fb_rc").alias(f"_fb_rc_{s}"),
         )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    framed = framed.withColumn(
-        _V, (F.col(_C) * F.lit(refine_max) + v2).cast("long")
-    ).drop(_C, "_fb_clo", "_fb_chi", "_fb_rc", "_fb_nr")
+        framed = framed.join(F.broadcast(cs), f"{_C}_{s}")
+        vd = F.col(v_name).cast("double")
+        v2 = (
+            F.when(
+                F.col(f"_fb_rc_{s}") > 1,
+                _bucket_dyn(
+                    vd, F.col(f"_fb_clo_{s}"), F.col(f"_fb_chi_{s}"),
+                    F.col(f"_fb_rc_{s}"), v_asc,
+                ),
+            )
+            .otherwise(F.lit(0))
+            .cast("long")
+        )
+        framed = framed.withColumn(
+            f"{_V}_{s}", (F.col(f"{_C}_{s}") * F.lit(refine_max) + v2).cast("long")
+        ).drop(f"{_C}_{s}", f"_fb_clo_{s}", f"_fb_chi_{s}", f"_fb_rc_{s}")
+    framed = framed.drop("_fb_nr")
 
-    # Bounded stats: one row per non-empty (unit-value, tie) cell. The
-    # pure-tie span test runs on the ORIGINAL column type — the double
-    # image of two distinct BIGINTs beyond 2^53 collides, and a
-    # sub-split of a false tie would interleave differing primary
-    # values across units.
-    cell_aggs = [
-        F.count(F.lit(1)).alias("_fb_cnt"),
-        F.min(F.col(v_name)).alias("_fb_lo"),
-        F.max(F.col(v_name)).alias("_fb_hi"),
+    # ONE cell-stats pass for all specs. The pure-tie span test runs on
+    # the ORIGINAL column type — the double image of two distinct
+    # BIGINTs beyond 2^53 collides, and a sub-split of a false tie
+    # would interleave differing primary values across units. A running
+    # sum's value rides only its own spec's struct (NULL elsewhere), so
+    # the struct type is the same across specs.
+    sums = [
+        (o, val, cum) for o, sp in enumerate(specs) for val, cum, _t in sp.running_sums
     ]
-    for val, cum, _tot in running_sums:
-        cell_aggs.append(F.sum(val).alias(f"_fb_s_{cum}"))
-    cells = framed.groupBy(_V, _K).agg(*cell_aggs)
-    sum_types = dict(cells.dtypes)
-    return framed, cells, sum_types, sort
+    cell_structs = [
+        F.struct(
+            F.lit(s).alias("_fb_s"),
+            F.col(f"{_V}_{s}").alias(_V),
+            F.col(f"{_K}_{s}").alias(_K),
+            F.col(spec.order_by[0][0]).alias("_fb_o"),
+            *[
+                (F.col(val) if owner == s else F.lit(None).cast(dtypes[val])).alias(
+                    f"_fb_sum_{cum}"
+                )
+                for owner, val, cum in sums
+            ],
+        )
+        for s, spec in enumerate(specs)
+    ]
+    cells = (
+        framed.select(F.explode(F.array(*cell_structs)).alias("_fb_e"))
+        .select("_fb_e.*")
+        .groupBy("_fb_s", _V, _K)
+        .agg(
+            F.count(F.lit(1)).alias("_fb_cnt"),
+            F.min("_fb_o").alias("_fb_lo"),
+            F.max("_fb_o").alias("_fb_hi"),
+            *[F.sum(f"_fb_sum_{cum}").alias(f"_fb_sum_{cum}") for _o, _v, cum in sums],
+        )
+    )
+    return framed, cells
 
 
 def unit_occupancy(
@@ -264,8 +345,8 @@ def unit_occupancy(
     refinement: tests assert the max unit stays near ``n /
     fine_buckets`` on adversarial clustered-with-outliers
     distributions, instead of trusting exactness alone."""
-    _framed, cells, _types, _sort = _prepare(
-        df, order_by, fine_buckets, tie_buckets, refine_max, (), True
+    _framed, cells = _stage(
+        df, [RankSpec(order_by)], fine_buckets, tie_buckets, refine_max, True
     )
     wv = Window.partitionBy(_V)
     sub = F.min("_fb_lo").over(wv) == F.max("_fb_hi").over(wv)
@@ -292,59 +373,70 @@ def with_global_order(
     refine_max: int = 2048,
     materialize: bool = True,
 ) -> DataFrame:
-    """Append exact global-order columns to ``df`` without a global sort.
+    """Append exact global-order columns to ``df`` without a global sort:
+    :func:`with_global_orders` with the one :class:`RankSpec` these
+    arguments spell. Output rows and values equal the plain
+    unpartitioned-window plan exactly."""
+    return with_global_orders(
+        df,
+        [RankSpec(order_by, rank_col, count_col, running_sums)],
+        fine_buckets=fine_buckets,
+        tie_buckets=tie_buckets,
+        refine_max=refine_max,
+        materialize=materialize,
+    )
 
-    ``order_by``: list of ``(column, ascending)`` — must be a TOTAL
-    order (append a unique tie-break); order columns non-null numeric.
-    ``rank_col``: global ``row_number`` under that order (1-based,
-    BIGINT). ``count_col``: total row count on every row (the
-    ``count(*) over ()`` analog). ``running_sums``: each
-    ``(value_col, cum_col, total_col)`` emits the running sum of
-    ``value_col`` up to and including the current row under the global
-    order, plus (when ``total_col`` is not None) the grand total.
-    Output rows and values equal the plain unpartitioned-window plan
-    exactly.
+
+def with_global_orders(
+    df: DataFrame,
+    specs: list[tuple],
+    *,
+    fine_buckets: int = 2048,
+    tie_buckets: int = 128,
+    refine_max: int = 2048,
+    materialize: bool = True,
+) -> DataFrame:
+    """N exact global orders over the SAME frame for the frame passes of
+    one. ``specs`` are :class:`RankSpec` fields as tuples — ``(order_by,
+    rank_col, count_col[, running_sums])``. Output rows and values
+    equal N plain unpartitioned-window plans exactly. Only the final
+    per-spec unit windows (each needs its own clustering of the frame)
+    are per-spec — exactly the part that cannot share a shuffle.
 
     ``materialize`` (default True) lazily ``localCheckpoint``s the
     input, so the passes this plan takes over it (bounds, coarse-cell
     stats, cell stats, the ranked output) compute its upstream lineage
-    ONCE — Spark
-    does not reliably reuse identical exchanges across subtrees (the
-    ``dedup_clusters`` discipline), and without the checkpoint a CHAIN
-    of global orders (RFM's three ranks) recomputes upstream
+    ONCE — Spark does not reliably reuse identical exchanges across
+    subtrees (the ``dedup_clusters`` discipline), and without the
+    checkpoint a CHAIN of global orders recomputes upstream
     exponentially. Cost at scale: one frame-sized executor-storage
-    materialization per call, the same currency as a shuffle write.
-    """
-    framed, cells, sum_types, sort = _prepare(
-        df, order_by, fine_buckets, tie_buckets, refine_max, running_sums,
-        materialize,
+    materialization per call, the same currency as a shuffle write."""
+    specs = [RankSpec(*spec) for spec in specs]
+    framed, cells = _stage(
+        df, specs, fine_buckets, tie_buckets, refine_max, materialize
     )
+    sum_types = dict(cells.dtypes)
 
-    # Everything below runs on the BOUNDED cells frame (≤ 2·fine·tie
-    # non-empty rows, data-size independent) as pure window arithmetic —
-    # no joins, no further aggregates. A fine bucket is sub-split by
+    # Everything below runs on the BOUNDED cells frame (≤ N·2·fine·tie
+    # non-empty rows, data-size independent) as pure window arithmetic
+    # — no joins, no further aggregates. A fine bucket is sub-split by
     # the tie bucket ONLY when it holds a single primary value (the one
     # case where tie-break order alone decides, so splitting cannot
     # interleave differing primary values); a unit is then either a
     # whole fine bucket or one (fine, tie) cell, and its prefix is
     #   global_cell_prefix − (pure_tie ? 0 : within_bucket_prefix)
-    # because a unit's cells are contiguous in (fine, tie) order. The
-    # constant partition key on the global window keeps the plan free
-    # of unbounded-frame global windows.
-    wv = Window.partitionBy(_V)
+    # because a unit's cells are contiguous in (fine, tie) order. Every
+    # window keys on (_fb_s, ...) so the per-spec cell frames stay
+    # separate inside shared operators — one window chain for all
+    # specs — and _fb_s doubles as the real (non-foldable) partition
+    # key of the per-spec "global" prefix window, so no plan carries an
+    # unpartitioned window.
+    wv = Window.partitionBy("_fb_s", _V)
     sub = F.min("_fb_lo").over(wv) == F.max("_fb_hi").over(wv)
-    # constant partition key, written as an expression the optimizer
-    # does NOT simplify away: lit(0) is constant-folded and `_V * 0`
-    # arithmetic-simplified out of the physical partition spec, after
-    # which WindowExec WARNs "No Partition Defined" on every query —
-    # misleading anyone scanning driver logs for real single-task
-    # funnels. pmod(_V, 1) ≡ 0 survives as a projected partition key.
-    # The frame here is the BOUNDED cells table (≤ 2·fine·tie rows by
-    # construction), so one partition is the intended plan either way.
-    g = Window.partitionBy(F.pmod(F.col(_V), F.lit(1))).orderBy(_V, _K)
+    g = Window.partitionBy("_fb_s").orderBy(_V, _K)
     prevg = g.rowsBetween(Window.unboundedPreceding, -1)
     fullg = g.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    prevv = Window.partitionBy(_V).orderBy(_K).rowsBetween(
+    prevv = Window.partitionBy("_fb_s", _V).orderBy(_K).rowsBetween(
         Window.unboundedPreceding, -1
     )
 
@@ -355,238 +447,6 @@ def with_global_order(
 
     staged = cells.withColumn("_fb_sub", sub)
     proj = [
-        F.col(_V),
-        F.col(_K),
-        F.when(F.col("_fb_sub"), F.col(_K))
-        .otherwise(F.lit(-1))
-        .cast("long")
-        .alias(_UK),
-        _prefix("_fb_cnt", F.lit(0)).cast("long").alias("_fb_off"),
-        F.sum("_fb_cnt").over(fullg).cast("long").alias("_fb_n"),
-    ]
-    for val, cum, _tot in running_sums:
-        zero = F.lit(0).cast(sum_types[f"_fb_s_{cum}"])
-        proj.append(_prefix(f"_fb_s_{cum}", zero).alias(f"_fb_po_{cum}"))
-        proj.append(F.sum(f"_fb_s_{cum}").over(fullg).alias(f"_fb_pt_{cum}"))
-    offsets = staged.select(*proj)
-
-    w_unit = Window.partitionBy(_V, _UK).orderBy(*sort)
-    w_run = w_unit.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    out = framed.join(F.broadcast(offsets), [_V, _K]).withColumn(
-        _LRN, F.row_number().over(w_unit).cast("long")
-    )
-    if rank_col is not None:
-        out = out.withColumn(rank_col, (F.col("_fb_off") + F.col(_LRN)).cast("long"))
-    if count_col is not None:
-        out = out.withColumn(count_col, F.col("_fb_n"))
-    for val, cum, tot in running_sums:
-        # cast back to the naive window plan's sum type: the bounded
-        # prefix-of-cell-sums widened it (decimal(38,2) vs the plain
-        # plan's decimal(28,2)), and a caller emitting the column
-        # directly must see the single-window schema.
-        st = sum_types[f"_fb_s_{cum}"]
-        out = out.withColumn(
-            cum, (F.col(f"_fb_po_{cum}") + F.sum(val).over(w_run)).cast(st)
-        )
-        if tot is not None:
-            out = out.withColumn(tot, F.col(f"_fb_pt_{cum}").cast(st))
-    drop = [_V, _K, _UK, _LRN, "_fb_off", "_fb_n"]
-    drop += [f"_fb_po_{cum}" for _v, cum, _t in running_sums]
-    drop += [f"_fb_pt_{cum}" for _v, cum, _t in running_sums]
-    return out.drop(*drop)
-
-
-def with_global_orders(
-    df: DataFrame,
-    specs: list[tuple[list[tuple[str, bool]], str, str | None]],
-    *,
-    fine_buckets: int = 2048,
-    tie_buckets: int = 128,
-    refine_max: int = 2048,
-    materialize: bool = True,
-) -> DataFrame:
-    """Batched :func:`with_global_order`: N exact global ranks over the
-    SAME frame for the frame passes of one. ``specs`` is a list of
-    ``(order_by, rank_col, count_col_or_None)``.
-
-    A multi-rank consumer (RFM scores three dimensions of one customer
-    frame) calling the single-rank operator N times pays N bounds
-    aggregates, N coarse-stats passes and N cell-stats passes over the
-    same rows. Here those fuse: ONE bounds aggregate carries every
-    spec's min/max, and the two stats passes run over a row-expanded
-    ``(spec, bucket)`` key — ``explode(array(struct...))`` then a
-    single groupBy, the manual form of GROUPING SETS, so the frame is
-    read once and the partial aggregation stays map-side combinable
-    into ≤ N·2·fine·tie groups. Only the final per-rank unit windows
-    (each needs its own clustering of the frame) remain per-spec —
-    exactly the part that cannot share a shuffle.
-
-    Restriction: every spec's primary order column must share one
-    dtype (the expanded struct carries the original-typed value for
-    the pure-tie span test); mixed-type rank batches should call the
-    single-rank operator per spec instead. Ranks equal
-    :func:`with_global_order`'s (property-tested)."""
-    if materialize:
-        df = df.localCheckpoint(eager=False)
-    dtypes = dict(df.dtypes)
-    parsed = []
-    for order_by, rank_col, count_col in specs:
-        v_name, v_asc = order_by[0]
-        k_name, k_asc = order_by[1] if len(order_by) > 1 else (None, True)
-        for c, _a in order_by[:2]:
-            if not dtypes[c].startswith(_NUMERIC_PREFIXES):
-                raise ValueError(
-                    f"order column {c!r} must be numeric, got {dtypes[c]}"
-                )
-        sort = [(F.col(c).asc() if a else F.col(c).desc()) for c, a in order_by]
-        parsed.append((v_name, v_asc, k_name, k_asc, rank_col, count_col, sort))
-    v_types = {dtypes[p[0]] for p in parsed}
-    if len(v_types) > 1:
-        raise ValueError(
-            f"batched ranks need one shared primary dtype, got {sorted(v_types)}"
-        )
-
-    bounds_agg = [F.count(F.lit(1)).alias("_fb_nr")]
-    for s, (v_name, _va, k_name, _ka, _r, _c, _sort) in enumerate(parsed):
-        vd = F.col(v_name).cast("double")
-        bounds_agg += [
-            F.min(vd).alias(f"_fb_vmin_{s}"),
-            F.max(vd).alias(f"_fb_vmax_{s}"),
-        ]
-        if k_name is not None:
-            kd = F.col(k_name).cast("double")
-            bounds_agg += [
-                F.min(kd).alias(f"_fb_kmin_{s}"),
-                F.max(kd).alias(f"_fb_kmax_{s}"),
-            ]
-    bounds = df.agg(*bounds_agg).localCheckpoint(eager=False)
-
-    framed = df.crossJoin(F.broadcast(bounds))
-    drop_bounds = []
-    for s, (v_name, v_asc, k_name, k_asc, _r, _c, _sort) in enumerate(parsed):
-        vd = F.col(v_name).cast("double")
-        framed = framed.withColumn(
-            f"{_C}_{s}",
-            _bucket(
-                vd, F.col(f"_fb_vmin_{s}"), F.col(f"_fb_vmax_{s}"),
-                fine_buckets, v_asc,
-            ),
-        )
-        drop_bounds += [f"_fb_vmin_{s}", f"_fb_vmax_{s}"]
-        if k_name is not None:
-            kd = F.col(k_name).cast("double")
-            framed = framed.withColumn(
-                f"{_K}_{s}",
-                _bucket(
-                    kd, F.col(f"_fb_kmin_{s}"), F.col(f"_fb_kmax_{s}"),
-                    tie_buckets, k_asc,
-                ),
-            )
-            drop_bounds += [f"_fb_kmin_{s}", f"_fb_kmax_{s}"]
-        else:
-            framed = framed.withColumn(f"{_K}_{s}", F.lit(0).cast("long"))
-    framed = framed.drop(*drop_bounds)
-
-    # ONE coarse-stats pass for all specs (expanded (spec, cell) key)
-    coarse_structs = [
-        F.struct(
-            F.lit(s).alias("_fb_s"),
-            F.col(f"{_C}_{s}").alias(_C),
-            F.col(p[0]).cast("double").alias("_fb_vd"),
-        )
-        for s, p in enumerate(parsed)
-    ]
-    coarse = (
-        framed.select(
-            F.explode(F.array(*coarse_structs)).alias("_fb_e"), F.col("_fb_nr")
-        )
-        .select("_fb_e.*", "_fb_nr")
-        .groupBy("_fb_s", _C)
-        .agg(
-            F.count(F.lit(1)).alias("_fb_ccnt"),
-            F.min("_fb_vd").alias("_fb_clo"),
-            F.max("_fb_vd").alias("_fb_chi"),
-            F.max("_fb_nr").alias("_fb_cn"),
-        )
-    )
-    rc = (
-        F.when(
-            (F.col("_fb_clo") < F.col("_fb_chi"))
-            & (F.col("_fb_ccnt") * fine_buckets > 4 * F.col("_fb_cn")),
-            F.least(
-                F.lit(refine_max).cast("long"),
-                F.expr(f"(_fb_ccnt * {fine_buckets} + _fb_cn - 1) div _fb_cn"),
-            ),
-        )
-        .otherwise(F.lit(1))
-        .cast("long")
-    )
-    coarse = coarse.select(
-        "_fb_s", _C, "_fb_clo", "_fb_chi", rc.alias("_fb_rc")
-    ).localCheckpoint(eager=False)  # bounded ≤ N·fine rows; joined N times
-    for s, (v_name, v_asc, _kn, _ka, _r, _c, _sort) in enumerate(parsed):
-        cs = coarse.filter(F.col("_fb_s") == s).select(
-            F.col(_C).alias(f"{_C}_{s}"),
-            F.col("_fb_clo").alias(f"_fb_clo_{s}"),
-            F.col("_fb_chi").alias(f"_fb_chi_{s}"),
-            F.col("_fb_rc").alias(f"_fb_rc_{s}"),
-        )
-        framed = framed.join(F.broadcast(cs), f"{_C}_{s}")
-        vd = F.col(v_name).cast("double")
-        v2 = (
-            F.when(
-                F.col(f"_fb_rc_{s}") > 1,
-                _bucket_dyn(
-                    vd, F.col(f"_fb_clo_{s}"), F.col(f"_fb_chi_{s}"),
-                    F.col(f"_fb_rc_{s}"), v_asc,
-                ),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
-        framed = framed.withColumn(
-            f"{_V}_{s}", (F.col(f"{_C}_{s}") * F.lit(refine_max) + v2).cast("long")
-        ).drop(f"{_C}_{s}", f"_fb_clo_{s}", f"_fb_chi_{s}", f"_fb_rc_{s}")
-    framed = framed.drop("_fb_nr")
-
-    # ONE cell-stats pass for all specs (original-typed span test)
-    cell_structs = [
-        F.struct(
-            F.lit(s).alias("_fb_s"),
-            F.col(f"{_V}_{s}").alias(_V),
-            F.col(f"{_K}_{s}").alias(_K),
-            F.col(p[0]).alias("_fb_o"),
-        )
-        for s, p in enumerate(parsed)
-    ]
-    cells = (
-        framed.select(F.explode(F.array(*cell_structs)).alias("_fb_e"))
-        .select("_fb_e.*")
-        .groupBy("_fb_s", _V, _K)
-        .agg(
-            F.count(F.lit(1)).alias("_fb_cnt"),
-            F.min("_fb_o").alias("_fb_lo"),
-            F.max("_fb_o").alias("_fb_hi"),
-        )
-    )
-
-    # ONE offsets window chain for all specs: every window keys on
-    # (_fb_s, ...) so the bounded per-spec cell frames stay separate
-    # inside shared operators — N window chains' worth of micro-stages
-    # collapse into one, and _fb_s doubles as the real (non-foldable)
-    # partition key for the per-spec "global" prefix window
-    wv = Window.partitionBy("_fb_s", _V)
-    sub = F.min("_fb_lo").over(wv) == F.max("_fb_hi").over(wv)
-    g = Window.partitionBy("_fb_s").orderBy(_V, _K)
-    prevg = g.rowsBetween(Window.unboundedPreceding, -1)
-    fullg = g.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    prevv = Window.partitionBy("_fb_s", _V).orderBy(_K).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    staged = cells.withColumn("_fb_sub", sub)
-    pg = F.coalesce(F.sum("_fb_cnt").over(prevg), F.lit(0))
-    pv = F.coalesce(F.sum("_fb_cnt").over(prevv), F.lit(0))
-    all_offsets = staged.select(
         "_fb_s",
         _V,
         _K,
@@ -594,31 +454,60 @@ def with_global_orders(
         .otherwise(F.lit(-1))
         .cast("long")
         .alias(_UK),
-        (pg - F.when(F.col("_fb_sub"), F.lit(0)).otherwise(pv))
-        .cast("long")
-        .alias("_fb_off"),
+        _prefix("_fb_cnt", F.lit(0)).cast("long").alias("_fb_off"),
         F.sum("_fb_cnt").over(fullg).cast("long").alias("_fb_n"),
-    ).localCheckpoint(eager=False)  # bounded ≤ N·2·fine·tie rows; N consumers
+    ]
+    for spec in specs:
+        for _val, cum, _tot in spec.running_sums:
+            zero = F.lit(0).cast(sum_types[f"_fb_sum_{cum}"])
+            proj.append(_prefix(f"_fb_sum_{cum}", zero).alias(f"_fb_po_{cum}"))
+            proj.append(F.sum(f"_fb_sum_{cum}").over(fullg).alias(f"_fb_pt_{cum}"))
+    all_offsets = staged.select(*proj)
+    if len(specs) > 1:
+        # bounded ≤ N·2·fine·tie rows read by N consumers: the sever
+        # pays one job to spare N−1 recomputations of the chain; with
+        # one consumer it would be a pure extra job
+        all_offsets = all_offsets.localCheckpoint(eager=False)
 
     out = framed
-    for s, (_vn, _va, _kn, _ka, rank_col, count_col, sort) in enumerate(parsed):
+    for s, spec in enumerate(specs):
+        carried = [
+            c for _v, cum, _t in spec.running_sums
+            for c in (f"_fb_po_{cum}", f"_fb_pt_{cum}")
+        ]
         offsets = all_offsets.filter(F.col("_fb_s") == s).select(
             F.col(_V).alias(f"{_V}_{s}"),
             F.col(_K).alias(f"{_K}_{s}"),
             F.col(_UK).alias(f"{_UK}_{s}"),
             F.col("_fb_off").alias(f"_fb_off_{s}"),
             F.col("_fb_n").alias(f"_fb_n_{s}"),
+            *carried,
         )
+        sort = [(F.col(c).asc() if a else F.col(c).desc()) for c, a in spec.order_by]
         w_unit = Window.partitionBy(f"{_V}_{s}", f"{_UK}_{s}").orderBy(*sort)
         out = out.join(F.broadcast(offsets), [f"{_V}_{s}", f"{_K}_{s}"])
-        out = out.withColumn(
-            rank_col,
-            (F.col(f"_fb_off_{s}") + F.row_number().over(w_unit)).cast("long"),
-        )
-        if count_col is not None:
-            out = out.withColumn(count_col, F.col(f"_fb_n_{s}"))
+        if spec.rank_col is not None:
+            out = out.withColumn(
+                spec.rank_col,
+                (F.col(f"_fb_off_{s}") + F.row_number().over(w_unit)).cast("long"),
+            )
+        if spec.count_col is not None:
+            out = out.withColumn(spec.count_col, F.col(f"_fb_n_{s}"))
+        w_run = w_unit.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        for val, cum, tot in spec.running_sums:
+            # cast back to the naive window plan's sum type: the bounded
+            # prefix-of-cell-sums widened it (decimal(38,2) vs the plain
+            # plan's decimal(28,2)), and a caller emitting the column
+            # directly must see the single-window schema.
+            st = sum_types[f"_fb_sum_{cum}"]
+            out = out.withColumn(
+                cum, (F.col(f"_fb_po_{cum}") + F.sum(val).over(w_run)).cast(st)
+            )
+            if tot is not None:
+                out = out.withColumn(tot, F.col(f"_fb_pt_{cum}").cast(st))
         out = out.drop(
-            f"{_V}_{s}", f"{_K}_{s}", f"{_UK}_{s}", f"_fb_off_{s}", f"_fb_n_{s}"
+            f"{_V}_{s}", f"{_K}_{s}", f"{_UK}_{s}", f"_fb_off_{s}", f"_fb_n_{s}",
+            *carried,
         )
     return out
 

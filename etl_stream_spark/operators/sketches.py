@@ -45,11 +45,6 @@ def kmv_hash(col: Column | str) -> Column:
     )
 
 
-def kmv_hash_sql(expr: str) -> str:
-    """DuckDB twin of :func:`kmv_hash`."""
-    return f"('0x' || substr(md5(CAST({expr} AS VARCHAR)), 1, {_KMV_HEX}))::BIGINT"
-
-
 def kmv_estimate(kth_min: Column, n_seen: Column, k: int) -> Column:
     """Cardinality estimate from the k-th minimum hash.
 

@@ -37,10 +37,6 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(c), TOKEN_SPLIT_RE), lambda t: t != F.lit(""))
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
 def normalized_text(col: Column | str) -> Column:
     """Canonical form used for fingerprints/exact dedup: tokens re-joined
     with single spaces (case/punctuation/whitespace insensitive)."""

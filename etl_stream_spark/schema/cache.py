@@ -58,9 +58,6 @@ class TtlLruCache(Generic[V]):
             self.put(key, value)
         return value
 
-    def invalidate(self, key: str) -> None:
-        self._entries.pop(key, None)
-
     def cleanup_expired(self) -> int:
         """Drop expired entries (the periodic cleanup task at
         ``schema_cache.rs:113-182``); returns count removed."""

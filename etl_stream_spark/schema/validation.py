@@ -36,12 +36,6 @@ def date_in_range(col: Column) -> Column:
     return col.between(F.lit(MIN_DATE).cast("date"), F.lit(MAX_DATE).cast("date"))
 
 
-def time_micros_in_range(col: Column) -> Column:
-    """µs-since-midnight TIME ≤ 23:59:59.999999 (``validation.rs:24-28``).
-    (Spark has no TimeType; the reference stores µs longs — SURVEY §1.2.)"""
-    return col.between(F.lit(0), F.lit(86_399_999_999))
-
-
 def decimal_fits(precision: int, scale: int) -> bool:
     """Static check of a decimal type against BIGNUMERIC bounds
     (``validation.rs:13-16,91``)."""

@@ -161,16 +161,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if narrow:
         df = df.withColumns({c: F.col(c).cast("long") for c in narrow})
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Register every testdata table as a temp view so ad-hoc
-    ``spark.sql`` works against the same names the DuckDB oracle uses.
-    Views are lazy — registering costs nothing until a query scans one."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-    return list(TABLE_NAMES)

@@ -80,60 +80,21 @@ def decode_cdc_json(
     bound to a column in its own projection so the JSON parse runs once
     per row (CollapseProject does not inline a non-cheap multi-ref
     alias — the round-8 tokenize-once rule); the payload fields come
-    from ``payload_schema`` directly, never from ``df.columns``."""
-    if _sql_unsafe(payload_schema, value_col):
-        return _decode_via_columns(raw, payload_schema, value_col)
+    from ``payload_schema`` directly, never from ``df.columns``. The
+    plan is the same for every schema: names and metadata holding
+    quotes, backticks or backslashes are escaped into it."""
     parse, flt, sel = _decode_exprs(payload_schema, value_col)
     return raw.selectExpr(parse).filter(flt).selectExpr(*sel)
 
 
-def _sql_unsafe(payload_schema: T.StructType, value_col: str) -> bool:
-    """True when embedding this schema/column in SQL string literals
-    could mis-parse: a quote or backslash anywhere in the schema's JSON
-    form (field names OR metadata), or a backtick/quote in an
-    identifier. Such inputs take the Column-object path — slower to
-    construct, immune to quoting."""
-    schema_str = cdc_envelope_schema(payload_schema).json()
-    if "'" in schema_str or "\\" in schema_str:
-        return True
-    return any(
-        ("`" in ident) or ("'" in ident)
-        for ident in [value_col, *payload_schema.fieldNames()]
-    )
+def _ident(name: str) -> str:
+    """Backtick-quoted SQL identifier (embedded backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _decode_via_columns(
-    raw: DataFrame, payload_schema: T.StructType, value_col: str
-) -> DataFrame:
-    """Column-object twin of the SQL-string plan (same two projections,
-    same one bound parse, same output): the fallback for field names /
-    metadata the SQL-literal form cannot safely embed."""
-    from etl_stream_spark.cdc.envelope import (
-        OPERATION_COL,
-        SEQUENCE_COL,
-        TIMESTAMP_COL,
-    )
-    from etl_stream_spark.functions.sequences import lsn_sequence_expr
-
-    env = raw.select(
-        F.from_json(
-            F.col(value_col).cast("string"), cdc_envelope_schema(payload_schema)
-        ).alias("e")
-    )
-    op = F.col("e.op")
-    mapped = None
-    for code, name in _OP_MAP.items():
-        mapped = F.when(op == code, name) if mapped is None else mapped.when(op == code, name)
-    payload = F.when(op == F.lit("d"), F.col("e.before")).otherwise(F.col("e.after"))
-    return env.filter(op.isin(*_OP_MAP)).select(
-        F.col("e.source.table").alias("table"),
-        mapped.alias(OPERATION_COL),
-        lsn_sequence_expr(F.col("e.source.lsn"), F.col("e.source.lsn")).alias(
-            SEQUENCE_COL
-        ),
-        F.timestamp_millis(F.col("e.ts_ms")).alias(TIMESTAMP_COL),
-        *[payload.getField(f).alias(f) for f in payload_schema.fieldNames()],
-    )
+def _string_literal(text: str) -> str:
+    """Single-quoted SQL string literal (backslash and quote escaped)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 #: (payload_schema.json(), value_col) → prepared SQL expression strings.
@@ -149,7 +110,10 @@ def _decode_exprs(
     ~200 ms); three ``selectExpr``/``filter`` string calls cost four.
     The strings are pure functions of the payload schema, so the cache
     key is the schema's JSON form (also what ``from_json`` is handed —
-    JSON survives any field name that JSON itself can encode)."""
+    JSON survives any field name that JSON itself can encode). Every
+    name and the schema literal are escaped (:func:`_ident`,
+    :func:`_string_literal`), so any field name or metadata embeds
+    safely."""
     from etl_stream_spark.cdc.envelope import (
         OPERATION_COL,
         SEQUENCE_COL,
@@ -161,8 +125,8 @@ def _decode_exprs(
     got = _DECODE_EXPR_CACHE.get(key)
     if got is not None:
         return got
-    schema_str = cdc_envelope_schema(payload_schema).json()
-    parse = f"from_json(cast(`{value_col}` as string), '{schema_str}') AS e"
+    schema_lit = _string_literal(cdc_envelope_schema(payload_schema).json())
+    parse = f"from_json(cast({_ident(value_col)} as string), {schema_lit}) AS e"
     codes = ", ".join(f"'{c}'" for c in _OP_MAP)
     # NULL op fails IN too, so one filter covers both legacy filters
     # (op non-null AND op maps to a known operation)
@@ -188,7 +152,7 @@ def _decode_exprs(
         f"{mapped} AS `{OPERATION_COL}`",
         f"{seq} AS `{SEQUENCE_COL}`",
         f"timestamp_millis(e.ts_ms) AS `{TIMESTAMP_COL}`",
-        *[f"{payload}.`{f}` AS `{f}`" for f in payload_schema.fieldNames()],
+        *[f"{payload}.{_ident(f)} AS {_ident(f)}" for f in payload_schema.fieldNames()],
     ]
     got = (parse, flt, sel)
     _DECODE_EXPR_CACHE[key] = got

@@ -113,6 +113,21 @@ class TestHeavyHitters:
         assert {r.item for r in heavy_hitters(df, "v", phi=0.1).collect()} == {"edge"}
         assert heavy_hitters(df, "v", phi=0.11).count() == 0
 
+    def test_phi_threshold_has_no_binary_rounding(self, spark):
+        """phi=0.07 at n=100: the threshold is exactly 7, but the double
+        product 0.07·100 is 7.000000000000001, whose ceil is 8. A key
+        seen exactly 7 times must survive both detectors (21 distinct
+        keys fit the capacity, so the MG residuals are exact counts)."""
+        from etl_stream_spark.operators.frequency import mg_hot_candidates
+
+        rows = [("edge",)] * 7 + [(f"t{i % 20}",) for i in range(93)]
+        df = spark.createDataFrame(rows, "v string").coalesce(1)
+        hh = {r.item: r.cnt for r in heavy_hitters(df, "v", phi=0.07).collect()}
+        assert hh == {"edge": 7}
+        assert {r.item for r in mg_hot_candidates(df, "v", phi=0.07).collect()} == {
+            "edge"
+        }
+
     def test_nulls_ignored_and_share(self, spark):
         df = spark.createDataFrame(
             [("a",)] * 6 + [(None,)] * 4 + [("b",)] * 2, "v string"

@@ -161,6 +161,32 @@ class TestEnvelopeDecode:
         assert r["operation"] == "INSERT"
         assert r["sequence"].startswith("0000000000000009/")
 
+    def test_decode_escapes_names_metadata_and_value_col(self, spark):
+        """Backslashes and quotes in a field name or in field metadata,
+        and a backtick in ``value_col``, all go through the one cached
+        SQL-string plan: same rows as a plain schema, still exactly two
+        from_json sites in the optimized plan."""
+        odd = "we'i`r\\d"
+        meta = {"comment": "it's a C:\\path"}
+        ps = T.StructType(
+            [
+                T.StructField("id", T.LongType()),
+                T.StructField(odd, T.StringType(), metadata=meta),
+            ]
+        )
+        plain = T.StructType(
+            [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
+        )
+        vals = [(_envelope("c", 7, after={"id": 3, odd: "x"}),)]
+        plain_vals = [(_envelope("c", 7, after={"id": 3, "v": "x"}),)]
+        col = "kafka`value"
+        out = decode_cdc_json(spark.createDataFrame(vals, [col]), ps, col)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json") == 2, plan
+        assert out.columns[-1] == odd
+        want = decode_cdc_json(spark.createDataFrame(plain_vals, ["value"]), plain)
+        assert [tuple(r) for r in out.collect()] == [tuple(r) for r in want.collect()]
+
 
 class TestInitialCopy:
     def test_snapshot_then_cdc_wins(self, spark, tmp_path):
