@@ -75,10 +75,14 @@ def newer_sequence_condition(
 
     ``target_cols`` (the live target's data columns) widens the hashed
     column set to the UNION of target and batch schemas with the same
-    stored-value fill the parquet engine's ``_merge_deduped`` applies:
-    a column absent from the batch keeps the target's value on update
-    and goes NULL on a winning delete; a column absent from the target
-    is NULL on the target side. Without it (tests of the pure clause
+    stored-value fill the parquet engine's fold applies
+    (``ParquetMergeTable._fold``): a column absent from the batch keeps
+    the target's value on update and goes NULL on a winning delete; a
+    column absent from the target is NULL on the target side. This twin
+    still picks the WITHIN-batch winner of a narrow batch by hashing the
+    batch's own columns only (the old within-batch tie), so on a
+    same-(key, sequence) collision carried by a narrow batch its
+    survivor can depend on the batch cut; the parquet fold's cannot. Without it (tests of the pure clause
     builders, same-schema batches) both aliases hash the batch columns
     — correct ONLY when batch schema == target schema, which ``merge``
     guarantees by always passing the live schema."""
@@ -97,7 +101,7 @@ def newer_sequence_condition(
             b_exprs.append(f"b.{c}")
         else:
             # keeps-target fill on update, typed-NULL scrub on a winning
-            # delete — the parquet engine's _b_stored accessor
+            # delete — the parquet engine's fold fills the same way
             b_exprs.append(f"(CASE WHEN {b_del} THEN null ELSE {t_expr} END)")
     tie_t = _stored_tie_sql(t_exprs, f"t.{SEQ_STATE_COL}", t_del)
     tie_b = _stored_tie_sql(b_exprs, f"b.{SEQUENCE_COL}", b_del)
@@ -236,7 +240,8 @@ class DeltaMergeTable:
         from etl_stream_spark.cdc.merge import _META_COLS, stored_shape_tie_break
 
         # within-batch winners picked by the SHARED stored-shape
-        # tie-break (parity with both parquet modes)
+        # tie-break over the batch's own columns (parity with the
+        # parquet fold whenever the batch is full-width)
         batch_data = sorted(c for c in batch.columns if c not in _META_COLS)
         tie = stored_shape_tie_break(
             [F.col(c) for c in batch_data],

@@ -14,6 +14,18 @@ applied ``sequence`` per key, and a matched source row only wins when its
 sequence is *newer* — stale (out-of-order, cross-batch replayed) events
 lose, including stale deletes.
 
+One rule applies every change: the FOLD (:meth:`ParquetMergeTable._fold`).
+Change rows in stored shape (data columns, ``_seq``, ``_deleted``,
+``_bucket``) are unioned with the touched buckets' state, and
+:meth:`~ParquetMergeTable._resolve` keeps the max per key by (sequence,
+:func:`stored_shape_tie_break`) — the dedup and the MERGE in one
+partial-aggregatable pass. Delete markers are then dropped unless
+``tombstone_deletes``, and the touched buckets are rewritten. The eager
+mode folds each batch at merge time; ``merge_on_read`` appends batches
+to an L0 delta log and folds the log at drain time. Either way the
+survivor is the global max over every row ever applied to the key, so
+it cannot depend on how the change stream was cut into batches.
+
 Storage & scale design (Delta/Iceberg jars are absent in this image; on a
 real deployment this class swaps for ``DeltaTable.merge`` — the public
 API is identical):
@@ -26,8 +38,8 @@ API is identical):
   of the table, not the whole table (the Delta partition-pruned MERGE
   strategy). At 100 TB with e.g. 65 536 buckets, a 1000-row trickle batch
   rewrites ≲1/65 536 of the table per trigger;
-* batch and target shuffle once, on the same key set (the join key), and
-  the dedup window reuses that exchange;
+* resolution is a ``max`` aggregation, so each map task pre-reduces to
+  one candidate per key and the shuffle carries ~|keys| rows;
 * no driver-side iteration over data — the only ``collect`` is the
   distinct *bucket id* list (bounded by ``num_buckets``).
 """
@@ -40,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors.exceptions.captured import AnalysisException
 
-from etl_stream_spark.cdc.dedup import last_writer_wins
+from etl_stream_spark.cdc.dedup import last_writer_wins_agg
 from etl_stream_spark.cdc.envelope import (
     OP_DELETE,
     OPERATION_COL,
@@ -85,16 +97,13 @@ def stored_shape_tie_break(
     seq_expr: F.Column,
     deleted_expr: F.Column,
 ) -> F.Column:
-    """THE same-sequence tie-break of the merge engine, shared by the
-    eager and merge-on-read modes: md5 over the data-column values (in
-    sorted column-name order — callers pass them that way), the
-    sequence, and the delete flag. Both engines hashing the same
-    LOGICAL shape is what makes ``merge_on_read`` a true drop-in: on a
-    pathological same-(key, sequence)-different-body collision, the
-    survivor is the global max by (sequence, this hash) — independent
-    of batch arrival order, batch cuts, or which engine resolved it.
-    md5 (not xxhash64) per the repo's engine-portable hashing rule, so
-    a DuckDB oracle can mirror the pick."""
+    """THE same-sequence tie-break of the merge engine: md5 over the
+    stored row's data-column values (in sorted column-name order —
+    callers pass them that way), the sequence, and the delete flag. On
+    a pathological same-(key, sequence)-different-body collision the
+    survivor is the max by (sequence, this hash). md5 (not xxhash64)
+    per the repo's engine-portable hashing rule, so a DuckDB oracle and
+    the Delta twin's SQL can mirror the pick."""
     parts = [F.coalesce(v.cast("string"), F.lit("\x00")) for v in values]
     parts.append(F.coalesce(seq_expr.cast("string"), F.lit("\x00")))
     parts.append(F.coalesce(deleted_expr.cast("boolean"), F.lit(False)).cast("string"))
@@ -142,22 +151,20 @@ class ParquetMergeTable:
         ``merge_on_read``: write-optimized LSM mode for high-frequency
         micro-batches (the Hudi merge-on-read / reference landing-table
         shape — the reference merges once per SCHEDULE, not per batch:
-        ``etl-snowflake-py/etl_snowflake/task.py:154-190``). Each merge
-        APPENDS the batch's LWW winners as delta files to the touched
-        buckets — no state read, no join, no partition-overwrite commit
-        — and reads resolve generations with the map-side-combinable
-        LWW aggregation (same sequence ordering + the same stored-shape
-        md5 tie-break as the eager path, so the visible state is
-        identical — including under same-(key, sequence) collisions;
-        see :func:`stored_shape_tie_break`). A bucket whose
-        delta-file count exceeds ``compact_threshold`` is compacted in
-        place on the next merge that touches it. Semantics notes vs the
-        eager default: delete markers persist until compaction even with
-        ``tombstone_deletes=False`` (a strictly smaller replay window),
-        and a batch whose schema DROPS columns falls back to the eager
-        join for that batch (column-absent-keeps-target needs the
-        target's values). Reads pay one extra shuffle — choose eager for
-        read-heavy tables, merge-on-read for trickle ingest."""
+        ``etl-snowflake-py/etl_snowflake/task.py:154-190``). It changes
+        only WHEN the fold runs, never what it computes. Each merge
+        APPENDS the batch in stored shape to the L0 delta log — no state
+        read, no join, no partition-overwrite commit — and reads resolve
+        L0 over the bucket state with the same :meth:`_resolve`. Once
+        ``compact_threshold`` delta files accumulate, the next merge
+        drains L0 through the fold (:meth:`compact`). Semantics notes vs
+        the eager default: delete markers persist in L0 until the drain
+        even with ``tombstone_deletes=False`` (a strictly smaller replay
+        window), and a batch whose schema DROPS columns is folded at
+        merge time, after a drain (the keeps-target fill needs the
+        target's values). Reads pay one extra shuffle while L0 is
+        non-empty — choose eager for read-heavy tables, merge-on-read
+        for trickle ingest."""
         if not keys:
             raise ValueError("ParquetMergeTable requires at least one key column")
         self.spark = spark
@@ -227,23 +234,55 @@ class ParquetMergeTable:
         self._stored_cols = sorted(set(cols))
         write_small_text(self.spark, self._cols_path, json.dumps(self._stored_cols))
 
-    def _resolve(self, raw: DataFrame) -> DataFrame:
-        """Collapse delta generations to the current row per key — the
-        merge-on-read read path. Same winner as the eager merge: max by
-        (sequence, stored-shape md5 tie-break), partial-aggregatable so
-        the shuffle carries ~|keys| rows, not the delta log."""
-        from etl_stream_spark.cdc.dedup import last_writer_wins_agg
+    def _resolve(self, base: DataFrame | None, changes: DataFrame) -> DataFrame:
+        """THE merge rule: union resolved bucket state ``base`` with the
+        stored-shape ``changes``, keep the max per key by (sequence,
+        stored-shape md5 tie-break), and drop delete markers unless
+        ``tombstone_deletes``. ``max`` is partial-aggregatable, so the
+        shuffle carries ~|keys| rows, not every generation.
 
+        A column ``base`` holds but ``changes`` lacks is filled per row
+        before resolution: an update keeps the target's value (Delta's
+        ``whenMatchedUpdate(set=…)`` assigns only listed columns; a NULL
+        *value* in a present column still overwrites), a delete takes
+        NULL (the pre-image must not linger on a tombstone —
+        Kafka-tombstone semantics). Every row is therefore hashed as it
+        would be stored, so the survivor of a same-sequence collision
+        does not depend on where the batches were cut."""
+        raw = changes
+        if base is not None:
+            absent = [c for c in base.columns if c not in changes.columns]
+            if absent:
+                t = base.select(*self.keys, *absent).alias("t")
+                cond = [
+                    F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in self.keys
+                ]
+                raw = changes.alias("b").join(t, cond, "left").select(
+                    *[F.col(f"b.{c}") for c in changes.columns],
+                    *[
+                        F.when(F.col(f"b.{DELETED_COL}"), F.lit(None))
+                        .otherwise(F.col(f"t.{c}"))
+                        .alias(c)
+                        for c in absent
+                    ],
+                )
+            raw = base.unionByName(raw, allowMissingColumns=True)
         data = sorted(c for c in raw.columns if c not in _META_COLS)
-        deleted = (
-            F.col(DELETED_COL)
-            if DELETED_COL in raw.columns
-            else F.lit(False)
-        )
         tie = stored_shape_tie_break(
-            [F.col(c) for c in data], F.col(SEQ_STATE_COL), deleted
+            [F.col(c) for c in data], F.col(SEQ_STATE_COL), F.col(DELETED_COL)
         )
-        return last_writer_wins_agg(raw, self.keys, SEQ_STATE_COL, tie_break=tie)
+        resolved = last_writer_wins_agg(
+            raw, self.keys, SEQ_STATE_COL, tie_break=tie
+        )
+        if self.tombstone_deletes:
+            return resolved
+        # drop the marker column too, not just the marker rows: a
+        # non-tombstone table's state never holds ``_deleted``, so every
+        # _read_state consumer (rollups, join views, checksums) sees one
+        # schema whether or not L0 happens to be drained. An un-drained
+        # L0 marker still WINS resolution before being filtered, so a
+        # stale replay stays suppressed until the drain drops it.
+        return _drop_delete_markers(resolved)
 
     @property
     def _delta_path(self) -> str:
@@ -275,17 +314,7 @@ class ParquetMergeTable:
             # hashes to exactly one bucket — so a drained table reads
             # with NO resolution shuffle, same cost as the eager engine
             return raw
-        raw = l0 if raw is None else raw.unionByName(l0, allowMissingColumns=True)
-        resolved = self._resolve(raw)
-        if not self.tombstone_deletes and DELETED_COL in resolved.columns:
-            # Eager-contract equivalence for every _read_state consumer
-            # (rollups, join views, checksums): a non-tombstone table's
-            # state never contains delete-marker rows, so un-drained L0
-            # markers must not surface as live rows. The marker still
-            # WINS resolution before being filtered, so a stale replay
-            # stays suppressed until compaction physically drops it.
-            resolved = _drop_delete_markers(resolved)
-        return resolved
+        return self._resolve(raw, l0)
 
     def _read_files(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Read target incl. bookkeeping cols, pruned to ``buckets``.
@@ -314,9 +343,7 @@ class ParquetMergeTable:
                 return None
         hit = sorted(self._existing_buckets().intersection(buckets))
         if not hit:
-            # No state for any touched bucket: semantically an empty
-            # target — merge's first-batch branch writes the identical
-            # result (deletes dropped / tombstoned, sequence renamed).
+            # No state for any touched bucket: an empty target.
             return None
         paths = [f"{self.path}/{BUCKET_COL}={b}" for b in hit]
         try:
@@ -352,74 +379,71 @@ class ParquetMergeTable:
 
     def merge(self, batch: DataFrame) -> None:
         """Apply one CDC micro-batch (rows with OPERATION + SEQUENCE
-        metadata columns; DELETE rows may carry PKs only)."""
+        metadata columns; DELETE rows may carry PKs only): fold it into
+        the touched buckets now (eager), or append it to L0 for the next
+        drain to fold (merge-on-read)."""
         if self.merge_on_read and self._fast_append(batch):
             return
         if self.merge_on_read:
-            # eager fallback (narrow batch / sidecar-less table): drain
-            # L0 first — the eager rewrite replaces whole bucket dirs,
-            # and any un-drained delta row it consumed would otherwise
-            # survive in L0 and resurrect dropped keys at read time
+            # narrow batch / sidecar-less table: drain L0 first — the
+            # fold below rewrites whole bucket dirs and fills absent
+            # columns from them, so both must see the current state
             self.compact()
-        # within-batch winners picked by the SHARED stored-shape
-        # tie-break (not a hash of the raw batch columns): the
-        # merge-on-read path appends colliding rows unresolved and
-        # picks at read time, so both engines must hash the same
-        # logical shape or they could install different survivors
-        data = sorted(c for c in batch.columns if c not in _META_COLS)
-        tie = stored_shape_tie_break(
-            [F.col(c) for c in data],
-            F.col(SEQUENCE_COL),
-            F.col(OPERATION_COL) == OP_DELETE,
-        )
-        deduped = last_writer_wins(
-            batch, self.keys, SEQUENCE_COL, tie_break=tie
-        ).drop(TIMESTAMP_COL)
-        # Persist the per-batch winners: both the bucket probe and the
-        # state write consume them, and without the cache each action
-        # re-runs the LWW shuffle AND the batch's upstream lineage. The
-        # frame is micro-batch-sized (≤ one row per key in the batch) —
-        # the standard foreachBatch cache, not a scale hazard.
-        deduped = deduped.withColumn(BUCKET_COL, self._bucket_expr()).persist()
+        # Persist the stored-shape batch once: the bucket probe, the
+        # keeps-target fill and the fold's write all consume it, and
+        # without the cache each action re-runs the batch's upstream
+        # lineage. Micro-batch-sized — the standard foreachBatch cache.
+        changes = self._stored_shape(batch).persist()
         try:
-            self._merge_deduped(deduped)
+            touched = [r[0] for r in changes.select(BUCKET_COL).distinct().collect()]
+            if touched:
+                self._fold(changes, touched)
             if self.merge_on_read:
-                # eager fallback in MOR mode consolidated the touched
-                # buckets; record the (possibly widened) schema
+                # record the (possibly widened) schema of the folded batch
                 stored = self._load_stored_cols() or []
-                batch_data = [c for c in deduped.columns if c not in _META_COLS]
+                batch_data = [c for c in batch.columns if c not in _META_COLS]
                 self._save_stored_cols(set(stored) | set(batch_data))
         finally:
-            deduped.unpersist()
+            changes.unpersist()
+
+    def _stored_shape(self, batch: DataFrame) -> DataFrame:
+        """A change batch as stored rows: its data columns, the sequence
+        as ``_seq``, the delete flag as ``_deleted`` and the bucket id —
+        the shape both L0 and the bucket directories hold."""
+        return batch.select(
+            *[F.col(c) for c in batch.columns if c not in _META_COLS],
+            F.col(SEQUENCE_COL).alias(SEQ_STATE_COL),
+            (F.col(OPERATION_COL) == OP_DELETE).alias(DELETED_COL),
+            self._bucket_expr().alias(BUCKET_COL),
+        )
+
+    def _fold(self, changes: DataFrame, touched: list[int]) -> None:
+        """Apply stored-shape ``changes`` to the ``touched`` buckets:
+        :meth:`_resolve` them over those buckets' state and rewrite the
+        buckets. Every CDC change reaches the bucket layout this way —
+        at merge time (eager, or a narrow merge-on-read batch) or at
+        drain time (merge-on-read)."""
+        self._write(
+            self._resolve(self._read_files(touched), changes), touched=touched
+        )
 
     def _fast_append(self, batch: DataFrame) -> bool:
-        """Merge-on-read fast path: ONE Spark job — project the raw
-        batch to the stored shape (data cols + ``_seq`` + ``_deleted``
-        marker + bucket) and append it. No state read, no join, no
-        within-batch dedup: read-time resolution collapses generations
-        by the same sequence ordering, with the SHARED stored-shape
-        md5 tie-break (:func:`stored_shape_tie_break`) both engines
-        use. The survivor of any same-(key, sequence) collision is
-        therefore the global max by (sequence, tie) in BOTH modes —
-        ``merge_on_read`` is a drop-in under arbitrary inputs in
-        tombstone mode (property-tested). The one remaining asymmetry
-        is inherent to non-tombstone deletes: a physically-removed row
-        leaves no tie state, so an equal-sequence replay arriving
-        AFTER the eager engine dropped the row re-inserts, while an
-        un-drained L0 marker may still out-hash it — the documented
-        non-tombstone replay window, unchanged.
+        """Merge-on-read fast path: ONE Spark job — append the batch in
+        stored shape (:meth:`_stored_shape`) to L0. No state read, no
+        join, no within-batch dedup: the read path and the drain resolve
+        every generation with the same :meth:`_resolve` the fold uses.
 
-        Returns False — caller runs the eager join — when the batch
-        schema is NARROWER than the stored one: column-absent-keeps-
-        target needs the target's values, since resolution takes the
-        whole winning row. The sidecar tracking the stored column union
-        makes that check one cached driver-side set comparison."""
+        Returns False — caller folds the batch now — when the batch
+        schema is NARROWER than the stored one: the keeps-target fill
+        needs the target's values, which L0 rows cannot carry. The
+        sidecar tracking the stored column union makes that check one
+        cached driver-side set comparison."""
         batch_data = [
             c for c in batch.columns if c not in _META_COLS
         ]
         stored = self._load_stored_cols()
         if stored is None and self.exists():
-            # pre-MOR table without a sidecar: eager-merge this batch
+            # pre-MOR table without a sidecar: fold this batch now
             # (consolidating the touched buckets), then seed the sidecar
             # from the FULL stored schema (one mergeSchema root read —
             # untouched buckets may hold wider columns) so no later
@@ -429,21 +453,15 @@ class ParquetMergeTable:
                 c for c in full.columns if c not in _META_COLS
             ]
             self._stored_cols = sorted(set(table_cols) | set(batch_data))
-            return False  # merge() runs eager, then persists the sidecar
+            return False  # merge() folds, then persists the sidecar
         if stored is not None and not set(stored) <= set(batch_data):
             return False
-        delta = batch.drop(TIMESTAMP_COL).select(
-            *[F.col(c) for c in batch_data],
-            F.col(SEQUENCE_COL).alias(SEQ_STATE_COL),
-            (F.col(OPERATION_COL) == OP_DELETE).alias(DELETED_COL),
-            self._bucket_expr().alias(BUCKET_COL),
-        )
         # L0 append: unpartitioned, shuffle-free, one directory — the
         # committer stages a handful of files instead of one per bucket
         # (measured ~4× cheaper than a partitionBy append). The bucket
-        # id rides along as a NORMAL column; compaction redistributes
+        # id rides along as a NORMAL column; the drain redistributes
         # it into the bucket layout.
-        self._l0.append(delta)
+        self._l0.append(self._stored_shape(batch))
         if stored is None or set(batch_data) - set(stored):
             self._save_stored_cols(set(stored or []) | set(batch_data))
         self._maybe_compact()
@@ -459,9 +477,8 @@ class ParquetMergeTable:
         return self._l0.files()
 
     def compact(self) -> None:
-        """Drain the L0 delta log into the bucket layout: resolve every
-        bucket L0 touches to one generation per key and rewrite those
-        directories, then delete the consumed L0 files. With
+        """Drain the L0 delta log: fold it into every bucket it touches
+        (:meth:`_fold`), then delete the consumed L0 files. With
         ``tombstone_deletes=False`` resolved delete markers are dropped
         here — after this point a sub-delete-sequence replay can
         re-insert, exactly the eager non-tombstone contract.
@@ -477,161 +494,8 @@ class ParquetMergeTable:
             return
         l0 = self.spark.read.option("mergeSchema", "true").parquet(*l0_files)
         touched = [r[0] for r in l0.select(BUCKET_COL).distinct().collect()]
-        base = self._read_files(touched)
-        raw = (
-            l0
-            if base is None
-            else base.unionByName(l0, allowMissingColumns=True)
-        )
-        resolved = self._resolve(raw)
-        if not self.tombstone_deletes and DELETED_COL in resolved.columns:
-            # drop the marker column too, not just the marker rows:
-            # compacted bucket dirs must stay column-identical to the
-            # eager engine (and to the drained-L0 raw read path), or
-            # _read_state consumers would see _deleted=false appear and
-            # vanish depending on whether L0 happened to be drained
-            resolved = _drop_delete_markers(resolved)
-        self._write(resolved, touched=touched)
+        self._fold(l0, touched)
         self._l0.delete_files(l0_files)
-
-    def _merge_deduped(self, deduped: DataFrame) -> None:
-        # Distinct bucket ids in this batch — bounded by num_buckets, the
-        # only driver-side collect in the merge.
-        touched = [r[0] for r in deduped.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            return
-
-        target = self._read_state(buckets=touched)
-        if target is None:
-            first = deduped
-            if self.tombstone_deletes:
-                # even a never-matched DELETE leaves a marker: an insert
-                # for the key replayed later (out of order) must lose
-                first = first.withColumn(
-                    DELETED_COL, F.col(OPERATION_COL) == OP_DELETE
-                )
-            else:
-                first = first.filter(F.col(OPERATION_COL) != OP_DELETE)
-            result = first.withColumnRenamed(SEQUENCE_COL, SEQ_STATE_COL).drop(
-                OPERATION_COL
-            )
-            self._write(result)
-            return
-
-        b = deduped.alias("b")
-        t = target.alias("t")
-        t_data = [c for c in target.columns if c not in _META_COLS]
-        b_data = [c for c in deduped.columns if c not in _META_COLS]
-        all_data = t_data + [c for c in b_data if c not in t_data]
-
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in self.keys]
-        joined = t.join(b, cond, "full_outer")
-
-        matched = F.col(f"t.{SEQ_STATE_COL}").isNotNull()
-        has_src = F.col(f"b.{SEQUENCE_COL}").isNotNull()
-        is_delete = F.col(f"b.{OPERATION_COL}") == OP_DELETE
-        t_deleted = (
-            F.coalesce(F.col(f"t.{DELETED_COL}"), F.lit(False))
-            if DELETED_COL in target.columns
-            else F.lit(False)
-        )
-        # Stored-value accessors shared by the tie-break and the output
-        # projection: ``_b_stored`` is the value the row WOULD hold if
-        # the source won — the batch's own column when present; for a
-        # column absent from the batch schema, the keeps-target value on
-        # update and a typed NULL on a winning delete (Kafka-tombstone
-        # scrub; see pick() below for the full rationale).
-        def _t_stored(col: str) -> F.Column:
-            return F.col(f"t.{col}") if col in t_data else F.lit(None)
-
-        def _b_stored(col: str) -> F.Column:
-            if col in b_data:
-                return F.col(f"b.{col}")
-            return F.when(is_delete, F.lit(None)).otherwise(_t_stored(col))
-
-        # Stale guard: a matched source row wins with a newer sequence
-        # (zero-padded strings → lexicographic order == event order).
-        # On an EQUAL sequence — an at-least-once redelivery, possibly
-        # with a different body — the stored-shape tie-break decides:
-        # both sides hash the row AS IT WOULD BE STORED (keeps-target
-        # fill included, via the same accessors the output projection
-        # uses), so the installed survivor is the max-hash stored
-        # outcome — the same pick the merge-on-read resolution makes on
-        # its stored rows, independent of batch cuts or arrival order.
-        all_sorted = sorted(all_data)
-        tie_t = stored_shape_tie_break(
-            [_t_stored(c) for c in all_sorted],
-            F.col(f"t.{SEQ_STATE_COL}"),
-            t_deleted,
-        )
-        tie_b = stored_shape_tie_break(
-            [_b_stored(c) for c in all_sorted],
-            F.col(f"b.{SEQUENCE_COL}"),
-            is_delete,
-        )
-        src_wins = has_src & (
-            ~matched
-            | (F.col(f"b.{SEQUENCE_COL}") > F.col(f"t.{SEQ_STATE_COL}"))
-            | (
-                (F.col(f"b.{SEQUENCE_COL}") == F.col(f"t.{SEQ_STATE_COL}"))
-                & (tie_b > tie_t)
-            )
-        )
-
-        if self.tombstone_deletes:
-            # every key survives physically; deletion is a state bit the
-            # stale guard protects like any other column
-            keep = F.lit(True)
-        else:
-            # WHEN MATCHED/NOT MATCHED + DELETE with a winning (newer)
-            # source sequence → row disappears; stale source or no
-            # source → keep target.
-            keep = ~(src_wins & is_delete) & (matched | (src_wins & ~is_delete))
-
-        def pick(col: str) -> F.Column:
-            # a column absent from the batch SCHEMA keeps the target's
-            # value on matched update — Delta's whenMatchedUpdate(set=…)
-            # can only assign listed columns, so the parquet engine must
-            # match or the documented drop-in swap would change results.
-            # (A NULL *value* in a present column still overwrites.)
-            #
-            # A WINNING DELETE also takes the batch side — and when the
-            # column is ABSENT from a PK-only delete's schema, a typed
-            # NULL, never the keeps-target fallback: the Delta twin's
-            # tombstone_assignments sets every data column from b, and
-            # retention demands the pre-image not linger on the
-            # tombstone until compaction — Kafka-tombstone semantics.
-            # (Only reachable in tombstone mode; winning deletes are
-            # filtered out otherwise.)
-            return (
-                F.when(src_wins, _b_stored(col))
-                .otherwise(_t_stored(col))
-                .alias(col)
-            )
-
-        key_exprs = [
-            F.coalesce(F.col(f"t.{k}"), F.col(f"b.{k}")).alias(k) for k in self.keys
-        ]
-        non_key_data = [c for c in all_data if c not in self.keys]
-        seq_expr = (
-            F.when(src_wins, F.col(f"b.{SEQUENCE_COL}"))
-            .otherwise(F.col(f"t.{SEQ_STATE_COL}"))
-            .alias(SEQ_STATE_COL)
-        )
-        bucket_expr = (
-            F.coalesce(F.col(f"t.{BUCKET_COL}"), F.col(f"b.{BUCKET_COL}"))
-            .alias(BUCKET_COL)
-        )
-
-        extra = []
-        if self.tombstone_deletes or DELETED_COL in target.columns:
-            extra.append(
-                F.when(src_wins, is_delete).otherwise(t_deleted).alias(DELETED_COL)
-            )
-        result = joined.filter(keep).select(
-            *key_exprs, *[pick(c) for c in non_key_data], seq_expr, bucket_expr, *extra
-        )
-        self._write(result, touched=touched)
 
     def purge_keys(self, keys_df: DataFrame) -> int:
         """Compliance erasure (right-to-be-forgotten): physically remove

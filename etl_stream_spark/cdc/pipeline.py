@@ -19,7 +19,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors.exceptions.captured import AnalysisException
 
@@ -229,13 +229,20 @@ class CdcBatchApplier:
                 trunc = per_table.filter(F.col(OPERATION_COL) == OP_TRUNCATE)
                 valid, quarantined = split(data, exps)
                 # park rejects BEFORE the merge so a crash cannot lose
-                # them; append-only, replayable after repair
-                quarantined.write.mode("append").parquet(
-                    f"{self.base_path}/_quarantine/{name}"
+                # them; append-only, replayable after repair. The
+                # observation counts the parked rows inside the write's
+                # own job — no second pass over the batch.
+                parked = Observation()
+                (
+                    quarantined.observe(parked, F.count(F.lit(1)).alias("rows"))
+                    .write.mode("append")
+                    .parquet(f"{self.base_path}/_quarantine/{name}")
                 )
                 if self.metrics is not None:
                     self.metrics.inc(
-                        "cdc_rows_quarantined_total", labels={"table": name}
+                        "cdc_rows_quarantined_total",
+                        parked.get["rows"],
+                        labels={"table": name},
                     )
                 per_table = valid.unionByName(trunc, allowMissingColumns=True)
             trunc_seqs = trunc_by_table.get(name, [])

@@ -169,7 +169,9 @@ def write_zordered(
     rewrites land near the target without any extra Spark job. It is an
     estimate (projection/compression shift real sizes by a small
     factor), a file-sizing knob, never a correctness one; an explicit
-    ``num_files`` is ignored when the target is given."""
+    ``num_files`` is ignored when the target is given. An input with no
+    size estimate (e.g. RDD-backed) raises ``ValueError``: pass
+    ``num_files`` for it."""
     if len(cols) < 2:
         raise ValueError("write_zordered needs at least two clustering columns")
     if bits is None:
@@ -178,12 +180,19 @@ def write_zordered(
         if target_file_bytes <= 0:
             raise ValueError("target_file_bytes must be positive")
         # py4j hands back scala.math.BigInt — round-trip through str.
-        # Clamp the derived count: an unsized plan estimates
-        # Long.MaxValue and a 2^63-way range partition is a driver DoS,
-        # not a layout.
         est = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        if est >= conf.defaultSizeInBytes():
+            # an unsized plan (RDD-backed, some sources) reports the
+            # spark.sql.defaultSizeInBytes sentinel: any count derived
+            # from it is a ~1M-way range partition, not a layout
+            raise ValueError(
+                "write_zordered: the input has no size estimate "
+                "(spark.sql.defaultSizeInBytes); pass num_files instead "
+                "of target_file_bytes"
+            )
         num_files = max(1, min(-(-est // int(target_file_bytes)), 1 << 20))
     # sever_bounds: the range-sample pass and the write pass below each
     # consume z — without the sever both re-run the full-input bounds

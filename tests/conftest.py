@@ -30,16 +30,38 @@ def catalog_frames(spark):
     ``df.schema`` / the ANALYZED plan freely; at most one consumer may
     force the PHYSICAL plan (QueryExecution caches executedPlan, so a
     second physical consumer under different session confs — AQE
-    toggles — would silently read the first one's plan). Today that
-    one physical consumer is the cartesian sweep; the AQE-off ceiling
-    suite deliberately builds its own frames."""
-    from etl_stream_spark.catalog import CATALOG
+    toggles — would silently read the first one's plan). That one
+    physical consumer must force the plan through
+    ``catalog_frames.executed_plan(name)``, which raises on a second
+    call for the same entry. Today it is the cartesian sweep; the
+    AQE-off ceiling suite deliberately builds its own frames."""
+    return _CatalogFrames(spark)
 
-    cache: dict = {}
 
-    def get(name: str):
-        if name not in cache:
-            cache[name] = CATALOG[name].fn(spark, "/root/testdata/sf0.001")
-        return cache[name]
+class _CatalogFrames:
+    def __init__(self, spark) -> None:
+        self._spark = spark
+        self._frames: dict = {}
+        self._planned: set[str] = set()
 
-    return get
+    def __call__(self, name: str):
+        from etl_stream_spark.catalog import CATALOG
+
+        if name not in self._frames:
+            self._frames[name] = CATALOG[name].fn(
+                self._spark, "/root/testdata/sf0.001"
+            )
+        return self._frames[name]
+
+    def executed_plan(self, name: str):
+        """Force ``name``'s physical plan — allowed once per entry,
+        since every later consumer would get this cached plan whatever
+        its session confs."""
+        if name in self._planned:
+            raise RuntimeError(
+                f"catalog_frames: {name}'s physical plan was already forced; "
+                "a second physical consumer would read the cached plan — "
+                "build a fresh frame instead"
+            )
+        self._planned.add(name)
+        return self(name)._jdf.queryExecution().executedPlan()

@@ -104,6 +104,41 @@ def test_pipeline_quarantine_gate(spark, tmp_path):
     assert got == {2: ["not_null(v)"], 3: ["in_range(v)"]}
 
 
+def test_quarantine_counter_counts_rows(spark, tmp_path):
+    """``cdc_rows_quarantined_total`` counts parked ROWS: one batch
+    with three rejects reads 3, not 1 per table-batch."""
+    from etl_stream_spark.cdc import OP_INSERT
+    from etl_stream_spark.cdc.pipeline import CdcBatchApplier, CdcTableConfig
+    from etl_stream_spark.streaming.metrics import MetricsRegistry
+
+    m = MetricsRegistry()
+    applier = CdcBatchApplier(
+        spark,
+        str(tmp_path / "silver"),
+        {"t": CdcTableConfig(keys=["id"], num_buckets=4,
+                             expectations=[ex.in_range("v", 0, 100)])},
+        metrics=m,
+    )
+    applier.apply_batch(
+        spark.createDataFrame(
+            [
+                (1, 5, OP_INSERT, "00000000000000000001", "t"),
+                (2, -1, OP_INSERT, "00000000000000000002", "t"),
+                (3, 101, OP_INSERT, "00000000000000000003", "t"),
+                (4, 999, OP_INSERT, "00000000000000000004", "t"),
+            ],
+            "id long, v long, operation string, sequence string, table string",
+        )
+    )
+    assert m.get("cdc_rows_quarantined_total", {"table": "t"}) == 3
+    (line,) = [
+        ln for ln in m.exposition().splitlines()
+        if ln.startswith('cdc_rows_quarantined_total{table="t"}')
+    ]
+    assert float(line.rsplit(" ", 1)[1]) == 3
+    assert {r["id"] for r in applier.target("t").read().collect()} == {1}
+
+
 def test_quarantine_repair_loop(spark, tmp_path):
     """Park → repair → resubmit: a repaired row passes the gate on
     replay and merges; read_quarantine exposes the parked rows."""

@@ -213,42 +213,45 @@ def test_modes_agree_under_sequence_collisions(
 
 def test_narrow_batch_collision_is_arrival_order_independent(spark, tmp_path):
     """Same-(key, sequence) collisions carried by NARROW batches (a
-    column missing from the batch schema) must still install one
-    arrival-order-independent survivor: the tie hashes the row AS IT
-    WOULD BE STORED (keeps-target fill), so both arrival orders compare
-    the same two stored outcomes."""
+    column missing from the batch schema) must install one survivor
+    whatever the batch cut — both rows in one batch, or either split
+    order — with and without tombstones: every row is hashed AS IT
+    WOULD BE STORED (keeps-target fill), so each cut compares the same
+    stored outcomes."""
     from pyspark.sql import functions as F
 
     base = spark.createDataFrame(
-        [(1, 1, 2, "UPDATE", make_sequence(1_700_000_000_000_000, 5))],
+        [(1, 0, 2, "UPDATE", make_sequence(1_700_000_000_000_000, 0))],
         "id long, a long, b long, operation string, sequence string",
     )
-    narrow = "id long, a long, operation string, sequence string"
-    n9 = spark.createDataFrame(
-        [(1, 9, "UPDATE", make_sequence(1_700_000_000_000_000, 5))], narrow
-    )
-    n7 = spark.createDataFrame(
-        [(1, 7, "UPDATE", make_sequence(1_700_000_000_000_000, 5))], narrow
-    )
-    states = []
-    for order in ((n9, n7), (n7, n9)):
-        t = ParquetMergeTable(
-            spark,
-            str(tmp_path / f"nb_{id(order)}"),
-            keys=["id"],
-            num_buckets=4,
-            tombstone_deletes=True,
-        )
-        t.merge(base.withColumn("cdc_timestamp", F.current_timestamp()))
-        for b in order:
-            t.merge(b.withColumn("cdc_timestamp", F.current_timestamp()))
-        states.append(
-            tuple(sorted((r["id"], r["a"], r["b"]) for r in t.read().collect()))
-        )
-    assert states[0] == states[1]
-    # the loser arrived in both orders, so the survivor is the max-hash
-    # stored outcome, and the kept column survives either way
-    assert states[0][0][2] == 2
+    seq = make_sequence(1_700_000_000_000_000, 5)
+    narrow = [(1, 1, "UPDATE", seq), (1, 5, "UPDATE", seq)]
+    schema = "id long, a long, operation string, sequence string"
+    cuts = {
+        "one_batch": [narrow],
+        "a1_then_a5": [narrow[:1], narrow[1:]],
+        "a5_then_a1": [narrow[1:], narrow[:1]],
+    }
+    for tombstone in (True, False):
+        states = {}
+        for label, batches in cuts.items():
+            t = ParquetMergeTable(
+                spark,
+                str(tmp_path / f"nb_{tombstone}_{label}"),
+                keys=["id"],
+                num_buckets=4,
+                tombstone_deletes=tombstone,
+            )
+            t.merge(base.withColumn("cdc_timestamp", F.current_timestamp()))
+            for rows in batches:
+                b = spark.createDataFrame(rows, schema)
+                t.merge(b.withColumn("cdc_timestamp", F.current_timestamp()))
+            states[label] = sorted(
+                (r["id"], r["a"], r["b"]) for r in t.read().collect()
+            )
+        # the survivor is the max-hash stored outcome, and the column
+        # absent from both narrow rows keeps the target's value
+        assert states == {label: [(1, 1, 2)] for label in cuts}, (tombstone, states)
 
 
 @pytest.mark.slow

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from etl_stream_spark.cdc import OP_INSERT, OP_UPDATE, ParquetMergeTable, make_sequence
 
@@ -289,6 +290,18 @@ def test_semantic_dedup_and_source_report_partitioning_invariant(spark):
     assert a == b and len(a) > 0
 
 
+def test_catalog_frames_refuses_second_physical_consumer(spark, catalog_frames):
+    """QueryExecution caches executedPlan: a second consumer forcing the
+    same shared frame's physical plan (under other session confs) would
+    silently read the first one's. The helper must fail loudly. A fresh
+    instance keeps the session-shared one untouched."""
+    frames = type(catalog_frames)(spark)
+    frames._frames["probe"] = spark.range(3)
+    assert "Range" in frames.executed_plan("probe").toString()
+    with pytest.raises(RuntimeError, match="already forced"):
+        frames.executed_plan("probe")
+
+
 def test_no_cartesian_product_in_any_batch_plan(spark, catalog_frames):
     """Sweep every batch catalog entry: a CartesianProduct anywhere is
     an unbounded pair-space blowup at 100 TB. Broadcast nested-loop
@@ -317,8 +330,7 @@ def test_no_cartesian_product_in_any_batch_plan(spark, catalog_frames):
         if name in skip:
             continue
         try:
-            df = catalog_frames(name)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = catalog_frames.executed_plan(name).toString()
         except Exception as exc:  # noqa: BLE001
             offenders.append(f"{name}: PLAN ERROR {exc}")
             continue

@@ -454,3 +454,24 @@ def test_write_zordered_target_file_bytes_sizes_the_layout(spark, tmp_path):
 
     with _pytest.raises(ValueError):
         write_zordered(df, str(tmp_path / "zz"), "a", "b", target_file_bytes=0)
+
+
+def test_write_zordered_target_file_bytes_rejects_unsized_input(spark, tmp_path):
+    """An RDD-backed frame has no size estimate: Catalyst reports the
+    ``spark.sql.defaultSizeInBytes`` sentinel, and a file count derived
+    from it would be a ~1M-way range partition. The write must refuse
+    and name ``num_files`` instead of planning it."""
+    import pytest as _pytest
+
+    from etl_stream_spark.plans.zorder import write_zordered
+
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i, i % 7) for i in range(50)], 2),
+        "a long, b long",
+    )
+    out = tmp_path / "z"
+    with _pytest.raises(ValueError, match="num_files"):
+        write_zordered(df, str(out), "a", "b", target_file_bytes=1 << 20)
+    assert not out.exists()
+    write_zordered(df, str(out), "a", "b", num_files=2)
+    assert spark.read.parquet(str(out)).count() == 50
